@@ -1,0 +1,9 @@
+"""Puts the benchmark's modules and the checkout root on the module path."""
+
+import os
+import sys
+
+BENCH = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+for p in (BENCH, os.path.dirname(BENCH)):
+    if p not in sys.path:
+        sys.path.insert(0, p)
