@@ -7,12 +7,7 @@ get their 10x-step growth measured: wall(sf1)/wall(sf0.1) must sit at or
 under the ~10x linear bar (plus log-factor headroom, the scale_sf1.py
 criterion); a quadratic candidate generator would read ~100x.
 
-Also hosts the VERDICT item-5 A/B: the knn/semdedup pair scorer's corpus
-ship mode (closure capture vs SparkContext.broadcast) at sf1, where the
-corpus (20k vectors) still fits the closure bound but the scoring stage
-has real width — pass --ship-ab to run it.
-
-Usage: python scripts/scale_r15.py [--ship-ab] [--json PATH]
+Usage: python scripts/scale_r15.py [--json PATH]
 Writes SCALE_r15.json at the repo root by default. Run ALONE (bench.py
 discipline: concurrent Spark JVMs inflate walls 4-8x).
 """
@@ -20,7 +15,6 @@ discipline: concurrent Spark JVMs inflate walls 4-8x).
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 
@@ -40,8 +34,6 @@ FAMILIES = [
     "q_inverted_delta",
 ]
 
-SHIP_AB_QUERIES = ["q_knn_graph", "q_semdedup"]
-
 
 def _probe(spark, names: list[str], reps_base: int = 2, reps_sf1: int = 2) -> dict:
     out: dict = {}
@@ -60,33 +52,6 @@ def _probe(spark, names: list[str], reps_base: int = 2, reps_sf1: int = 2) -> di
     return out
 
 
-def _ship_ab(spark, reps: int = 3) -> dict:
-    """Interleaved closure-vs-broadcast A/B of the pair scorer at sf1.
-    The env knob is read at plan-build time, so each rep rebuilds the
-    query under the mode it measures."""
-    out: dict = {}
-    for name in SHIP_AB_QUERIES:
-        walls: dict[str, list[float]] = {"closure": [], "broadcast": []}
-        for _ in range(reps):
-            for mode in ("closure", "broadcast"):
-                os.environ["SPARK_GRAFT_SCORE_SHIP"] = mode
-                t0 = time.time()
-                QUERIES[name].builder(spark, s1.SF1_DIR).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                walls[mode].append(round(time.time() - t0, 3))
-                s1._release_cached(spark)
-        os.environ.pop("SPARK_GRAFT_SCORE_SHIP", None)
-        out[name] = {
-            "closure": walls["closure"],
-            "broadcast": walls["broadcast"],
-            "closure_min": min(walls["closure"]),
-            "broadcast_min": min(walls["broadcast"]),
-        }
-        print(f"# ship A/B {name}: closure {walls['closure']} broadcast {walls['broadcast']}", file=sys.stderr)
-    return out
-
-
 def main() -> None:
     json_path = "/root/repo/SCALE_r15.json"
     if "--json" in sys.argv:
@@ -100,8 +65,6 @@ def main() -> None:
         "sf1_dir": s1.SF1_DIR,
         "families": _probe(spark, FAMILIES),
     }
-    if "--ship-ab" in sys.argv:
-        res["ship_ab_sf1"] = _ship_ab(spark)
     try:
         import subprocess
 

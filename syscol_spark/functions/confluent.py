@@ -10,13 +10,16 @@ Port, Namespace, Timestamp, Metrics; the Metrics field is *bytes containing
 JSON* of the map (metrics_reporter.go:151-165), i.e. the Avro schema does
 not describe individual metrics.
 
-No Avro library ships in this environment, and Spark's to_avro/from_avro
-(external spark-avro module) are not on the classpath — so the codec is
-implemented directly from the Avro 1.x binary spec (zigzag-varint ints,
-length-prefixed utf8/bytes), which for this flat record is ~40 lines and
-byte-exact. Exposed as Arrow-batched pandas UDFs: the envelope JSON is
-produced JVM-side (to_json), only the final byte framing crosses to Python
-in Arrow batches.
+Spark's to_avro/from_avro live in the external spark-avro module, which is
+not on the classpath, so ``AvroCodec`` implements the Avro 1.x binary spec
+directly (zigzag-varint ints, length-prefixed utf8/bytes, blocked arrays and
+maps, unions). It is the one codec for every schema, the envelope included.
+
+The envelope columns are Arrow-batched pandas UDFs. On encode, to_json
+renders the envelope struct JVM-side; the UDF then json-parses each
+envelope again, re-serializes its Metrics map as compact JSON and writes the
+Avro body and frame. On decode, the UDF unframes and decodes the body and
+returns the envelope as a JSON string for from_json.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ import struct
 from typing import NamedTuple
 
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 from pyspark.sql.types import BinaryType, StringType
@@ -82,103 +86,44 @@ def zigzag_decode(buf: bytes, pos: int) -> tuple[int, int]:
     return (acc >> 1) ^ -(acc & 1), pos
 
 
-def _enc_str(s: str) -> bytes:
-    raw = s.encode("utf-8")
-    return zigzag_encode(len(raw)) + raw
+def _enc_prim(t: str, v: object) -> bytes:
+    """One primitive value: zigzag-varint int/long, IEEE little-endian
+    float/double, length-prefixed utf8/bytes."""
+    if t == "null":
+        return b""
+    if t == "boolean":
+        return b"\x01" if v else b"\x00"
+    if t in ("int", "long"):
+        return zigzag_encode(int(v))
+    if t == "float":
+        return struct.pack("<f", float(v))
+    if t == "double":
+        return struct.pack("<d", float(v))
+    if t == "bytes":
+        raw = bytes(v)
+        return zigzag_encode(len(raw)) + raw
+    if t == "string":
+        raw = str(v).encode("utf-8")
+        return zigzag_encode(len(raw)) + raw
+    raise ValueError(f"unsupported type {t!r}")
 
 
-def _enc_bytes(b: bytes) -> bytes:
-    return zigzag_encode(len(b)) + b
-
-
-class FlatAvroCodec:
-    """Generic Avro binary codec for FLAT record schemas.
-
-    Covers the primitive type universe of the reference's vendored decoder
-    (go-kafka-avro/avro_encoder_decoder.go:127-170 over go-avro's
-    schema.go:11-26): null, boolean, int, long, float, double, bytes,
-    string — plus optional-field unions ``["null", <primitive>]``. Nested
-    records/arrays/maps/enums are out of scope for the wire path (the
-    reference's only production record is flat; nested payloads travel as
-    JSON-in-bytes, same as its Metrics field).
-
-    Implemented directly from the Avro 1.x binary spec: zigzag-varint
-    int/long, IEEE little-endian float/double, length-prefixed utf8/bytes,
-    union = varint branch index + branch value.
-    """
-
-    def __init__(self, schema: dict):
-        if schema.get("type") != "record":
-            raise ValueError("FlatAvroCodec needs a record schema")
-        self.name = schema["name"]
-        self.fields: list[tuple[str, object]] = []
-        for f in schema["fields"]:
-            t = f["type"]
-            if isinstance(t, list):
-                if len(t) != 2 or "null" not in t:
-                    raise ValueError(f"field {f['name']}: only [null, primitive] unions supported")
-            elif t not in ("null", "boolean", "int", "long", "float", "double", "bytes", "string"):
-                raise ValueError(f"field {f['name']}: unsupported type {t!r} (flat records only)")
-            self.fields.append((f["name"], t))
-
-    @staticmethod
-    def _enc_value(t: str, v: object) -> bytes:
-        if t == "null":
-            return b""
-        if t == "boolean":
-            return b"\x01" if v else b"\x00"
-        if t in ("int", "long"):
-            return zigzag_encode(int(v))
-        if t == "float":
-            return struct.pack("<f", float(v))
-        if t == "double":
-            return struct.pack("<d", float(v))
-        if t == "bytes":
-            return _enc_bytes(bytes(v))
-        if t == "string":
-            return _enc_str(str(v))
-        raise ValueError(f"unsupported type {t!r}")
-
-    @staticmethod
-    def _dec_value(t: str, buf: bytes, pos: int) -> tuple[object, int]:
-        if t == "null":
-            return None, pos
-        if t == "boolean":
-            return buf[pos] != 0, pos + 1
-        if t in ("int", "long"):
-            return zigzag_decode(buf, pos)
-        if t == "float":
-            return struct.unpack_from("<f", buf, pos)[0], pos + 4
-        if t == "double":
-            return struct.unpack_from("<d", buf, pos)[0], pos + 8
-        if t in ("bytes", "string"):
-            n, pos = zigzag_decode(buf, pos)
-            raw = buf[pos : pos + n]
-            return (raw.decode("utf-8") if t == "string" else raw), pos + n
-        raise ValueError(f"unsupported type {t!r}")
-
-    def encode(self, record: dict) -> bytes:
-        out = []
-        for name, t in self.fields:
-            v = record.get(name)
-            if isinstance(t, list):  # [null, primitive] union
-                branch = t.index("null") if v is None else 1 - t.index("null")
-                out.append(zigzag_encode(branch))
-                out.append(self._enc_value(t[branch], v))
-            else:
-                out.append(self._enc_value(t, v))
-        return b"".join(out)
-
-    def decode(self, body: bytes) -> dict:
-        pos = 0
-        out = {}
-        for name, t in self.fields:
-            if isinstance(t, list):
-                branch, pos = zigzag_decode(body, pos)
-                out[name], pos = self._dec_value(t[branch], body, pos)
-            else:
-                out[name], pos = self._dec_value(t, body, pos)
-        return out
+def _dec_prim(t: str, buf: bytes, pos: int) -> tuple[object, int]:
+    if t == "null":
+        return None, pos
+    if t == "boolean":
+        return buf[pos] != 0, pos + 1
+    if t in ("int", "long"):
+        return zigzag_decode(buf, pos)
+    if t == "float":
+        return struct.unpack_from("<f", buf, pos)[0], pos + 4
+    if t == "double":
+        return struct.unpack_from("<d", buf, pos)[0], pos + 8
+    if t in ("bytes", "string"):
+        n, pos = zigzag_decode(buf, pos)
+        raw = buf[pos : pos + n]
+        return (raw.decode("utf-8") if t == "string" else raw), pos + n
+    raise ValueError(f"unsupported type {t!r}")
 
 
 _PRIMITIVES = ("null", "boolean", "int", "long", "float", "double", "bytes", "string")
@@ -207,9 +152,9 @@ class AvroCodec:
     * record   → fields in schema order
 
     Python value mapping: record/map → dict, array → list, enum → symbol
-    string, fixed → bytes. ``FlatAvroCodec`` remains the fast path for flat
-    records (the reference's only production schema is flat); ``codec_for``
-    picks automatically.
+    string, fixed → bytes. A map may also arrive as a list of (key, value)
+    tuples, the form Arrow's ``to_pylist`` gives Spark map cells; an empty
+    list then matches the first of a union's array/map branches.
     """
 
     def __init__(self, schema: dict | str | list):
@@ -288,8 +233,10 @@ class AvroCodec:
         if kind == "enum":
             return isinstance(v, str) and v in node[2]
         if kind == "array":
-            return isinstance(v, list)
-        if kind in ("record", "map"):
+            return isinstance(v, list) and not (v and isinstance(v[0], tuple))
+        if kind == "map":
+            return isinstance(v, dict) or (isinstance(v, list) and all(isinstance(x, tuple) for x in v))
+        if kind == "record":
             return isinstance(v, dict)
         return False
 
@@ -297,7 +244,7 @@ class AvroCodec:
         node = self._deref(node)
         kind = node[0]
         if kind == "prim":
-            out.append(FlatAvroCodec._enc_value(node[1], v))
+            out.append(_enc_prim(node[1], v))
         elif kind == "fixed":
             raw = bytes(v)
             if len(raw) != node[2]:
@@ -314,8 +261,8 @@ class AvroCodec:
         elif kind == "map":
             if v:
                 out.append(zigzag_encode(len(v)))
-                for key, val in v.items():
-                    out.append(_enc_str(key))
+                for key, val in v.items() if isinstance(v, dict) else v:
+                    out.append(_enc_prim("string", key))
                     self._enc(node[1], val, out)
             out.append(b"\x00")
         elif kind == "union":
@@ -346,7 +293,7 @@ class AvroCodec:
         node = self._deref(node)
         kind = node[0]
         if kind == "prim":
-            return FlatAvroCodec._dec_value(node[1], buf, pos)
+            return _dec_prim(node[1], buf, pos)
         if kind == "fixed":
             size = node[2]
             return bytes(buf[pos : pos + size]), pos + size
@@ -375,7 +322,7 @@ class AvroCodec:
                     n = -n
                     _, pos = zigzag_decode(buf, pos)
                 for _ in range(n):
-                    key, pos = FlatAvroCodec._dec_value("string", buf, pos)
+                    key, pos = _dec_prim("string", buf, pos)
                     d[key], pos = self._dec(node[1], buf, pos, tag)
         if kind == "union":
             branch, pos = zigzag_decode(buf, pos)
@@ -400,75 +347,8 @@ class AvroCodec:
         v, pos = self._dec(self._root, body, 0, tag=True)
         return v
 
-    # --- JSON interop --------------------------------------------------------
 
-    def coerce_jsonable(self, v: object, node: list | None = None) -> object:
-        """Inverse of _bytes_to_jsonable, schema-guided: JSON strings at
-        bytes/fixed schema positions become latin-1 bytes, recursively. At a
-        union with BOTH a string and a bytes/fixed branch, strings stay
-        strings (the string branch wins on encode anyway)."""
-        node = self._deref(node if node is not None else self._root)
-        kind = node[0]
-        if kind == "prim":
-            return v.encode("latin-1") if node[1] == "bytes" and isinstance(v, str) else v
-        if kind == "fixed":
-            return v.encode("latin-1") if isinstance(v, str) else v
-        if kind == "array":
-            return [self.coerce_jsonable(x, node[1]) for x in v] if isinstance(v, list) else v
-        if kind == "map":
-            if isinstance(v, dict):
-                return {k: self.coerce_jsonable(x, node[1]) for k, x in v.items()}
-            return v
-        if kind == "record":
-            if isinstance(v, dict):
-                fields = dict(node[2])
-                return {
-                    k: (self.coerce_jsonable(x, fields[k]) if k in fields else x)
-                    for k, x in v.items()
-                }
-            return v
-        if kind == "union":
-            branches = [self._deref(b) for b in node[1]]
-            if isinstance(v, str) and not any(
-                b[0] == "prim" and b[1] == "string" for b in branches
-            ) and not any(b[0] == "enum" for b in branches):
-                target = next(
-                    (b for b in branches if b[0] == "fixed" or (b[0] == "prim" and b[1] == "bytes")),
-                    None,
-                )
-                if target is not None:
-                    return self.coerce_jsonable(v, target)
-            for b in branches:
-                if self._matches(b, v):
-                    return self.coerce_jsonable(v, b)
-            return v
-        return v
-
-
-def _is_flat(schema: dict) -> bool:
-    """True when FlatAvroCodec's fast path covers the schema."""
-    if not isinstance(schema, dict) or schema.get("type") != "record":
-        return False
-    for f in schema.get("fields", []):
-        t = f.get("type")
-        if isinstance(t, list):
-            if len(t) != 2 or "null" not in t or not all(
-                isinstance(b, str) and b in _PRIMITIVES for b in t
-            ):
-                return False
-        elif not (isinstance(t, str) and t in _PRIMITIVES):
-            return False
-    return True
-
-
-def codec_for(schema: dict) -> FlatAvroCodec | AvroCodec:
-    """Flat record → FlatAvroCodec (fast path); anything else → AvroCodec.
-    Both produce identical bytes for flat records (the flat path is a strict
-    subset of the spec), so the choice is invisible on the wire."""
-    return FlatAvroCodec(schema) if _is_flat(schema) else AvroCodec(schema)
-
-
-_ENVELOPE_CODEC = FlatAvroCodec(SLAVE_METRICS_AVSC)
+_ENVELOPE_CODEC = AvroCodec(SLAVE_METRICS_AVSC)
 
 
 def encode_slave_metrics(
@@ -568,10 +448,8 @@ def from_confluent_avro_generic(value: Column, schemas_by_id: dict[int, dict]) -
     ``bytes`` fields are emitted as latin-1-mapped strings in the JSON (a
     lossless byte↔codepoint mapping) since JSON has no binary type — at any
     nesting depth; parse with from_json downstream using a matching schema.
-    Schemas beyond the flat fast path (nested records, arrays, maps, enums,
-    fixed, general unions) dispatch to the full AvroCodec via codec_for.
     """
-    codecs = {sid: codec_for(s) for sid, s in schemas_by_id.items()}
+    codecs = {sid: AvroCodec(s) for sid, s in schemas_by_id.items()}
 
     @F.pandas_udf(StringType())
     def _decode(vs: pd.Series) -> pd.Series:
@@ -606,39 +484,22 @@ def _bytes_to_jsonable(v: object) -> object:
 
 def to_confluent_avro_generic(record: Column, schema: dict, schema_id: int) -> Column:
     """Generic write path: a struct column whose field names match the Avro
-    ``schema`` → Confluent-framed binary. The struct is serialized JVM-side
-    (to_json); only byte framing crosses to Python, Arrow-batched. Flat
-    records take the FlatAvroCodec fast path; nested schemas dispatch to the
-    full AvroCodec, with JSON strings coerced back to bytes (latin-1) at
-    bytes/fixed schema positions at any depth."""
-    codec = codec_for(schema)
-    if isinstance(codec, FlatAvroCodec):
+    ``schema`` → Confluent-framed binary.
 
-        @F.pandas_udf(BinaryType())
-        def _encode(js: pd.Series) -> pd.Series:
-            def one(j: str) -> bytes:
-                d = json.loads(j)
-                rec = {}
-                for name, t in codec.fields:
-                    v = d.get(name)
-                    if t == "bytes" and isinstance(v, str):
-                        v = v.encode("latin-1")
-                    rec[name] = v
-                return frame_confluent(codec.encode(rec), schema_id)
+    The struct crosses to Python as Arrow and is read with ``to_pylist``,
+    which keeps every value exact: binary cells arrive as bytes and a
+    nullable long keeps all 64 bits (a pandas UDF would see a long column
+    holding a null as float64)."""
+    codec = AvroCodec(schema)
 
-            return js.map(one)
+    @F.arrow_udf(BinaryType())
+    def _encode(recs: pa.Array) -> pa.Array:
+        return pa.array(
+            [frame_confluent(codec.encode(r), schema_id) for r in recs.to_pylist()],
+            pa.binary(),
+        )
 
-        return _encode(F.to_json(record))
-
-    @F.pandas_udf(BinaryType())
-    def _encode_full(js: pd.Series) -> pd.Series:
-        def one(j: str) -> bytes:
-            rec = codec.coerce_jsonable(json.loads(j))
-            return frame_confluent(codec.encode(rec), schema_id)
-
-        return js.map(one)
-
-    return _encode_full(F.to_json(record))
+    return _encode(record)
 
 
 # --- schema registry client (§2.9) ------------------------------------------
@@ -982,11 +843,8 @@ class AvroResolver:
 
 def decode_resolved(body: bytes, writer_schema: dict, reader_schema: dict) -> object:
     """Decode Avro binary written with ``writer_schema`` and project it into
-    ``reader_schema`` (the registry-consumer evolution path). Uses the
-    branch-tagged decode when the codec supports it, so union resolution
-    follows the exact wire branch rather than guessing from value shape."""
-    codec = codec_for(writer_schema)
-    decoded = (
-        codec.decode_tagged(body) if hasattr(codec, "decode_tagged") else codec.decode(body)
-    )
+    ``reader_schema`` (the registry-consumer evolution path). The decode is
+    branch-tagged, so union resolution follows the exact wire branch rather
+    than guessing from value shape."""
+    decoded = AvroCodec(writer_schema).decode_tagged(body)
     return AvroResolver(writer_schema, reader_schema).project(decoded)

@@ -15,7 +15,6 @@ Two paths:
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -1000,6 +999,17 @@ def _srp_candidate_pairs(
     return small_pairs.unionByName(big_pairs).dropDuplicates(["id_a", "id_b"])
 
 
+def _cosine_frame(pdf, va, vb):
+    """The pair scorers' one cosine kernel: (id_a, id_b, raw cosine) for the
+    row-aligned float64 vector matrices ``va``/``vb`` of an Arrow batch."""
+    dots = np.einsum("ij,ij->i", va, vb)
+    na = np.sqrt(np.einsum("ij,ij->i", va, va))
+    nb = np.sqrt(np.einsum("ij,ij->i", vb, vb))
+    out = pdf[["id_a", "id_b"]].copy()
+    out["cosine"] = dots / (na * nb)
+    return out
+
+
 def _score_pairs_arrow(pairs_with_vecs: DataFrame) -> DataFrame:
     """Batch-score candidate pairs with numpy (Arrow transfer): one einsum
     per batch instead of one interpreted fold per pair — the mandated
@@ -1022,19 +1032,12 @@ def _score_pairs_arrow(pairs_with_vecs: DataFrame) -> DataFrame:
     )
 
     def score(batches):
-        import numpy as np
-
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             va = np.stack(pdf["vec_a"].to_numpy()).astype("float64")
             vb = np.stack(pdf["vec_b"].to_numpy()).astype("float64")
-            dots = np.einsum("ij,ij->i", va, vb)
-            na = np.sqrt(np.einsum("ij,ij->i", va, va))
-            nb = np.sqrt(np.einsum("ij,ij->i", vb, vb))
-            out = pdf[["id_a", "id_b"]].copy()
-            out["cosine"] = dots / (na * nb)
-            yield out
+            yield _cosine_frame(pdf, va, vb)
 
     scored = pairs_with_vecs.mapInPandas(score, out_schema)
     return scored.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
@@ -1080,9 +1083,9 @@ def _score_pairs_closure(
     2.2 s -> 0.6 s on the 622k-pair knn_graph scoring step at sf0.1.
 
     Callers MUST gate on _BROADCAST_SCORE_LIMIT (see _score_pairs_for).
-    The einsum and the final F.round are byte-identical to
-    _score_pairs_arrow, so the two paths emit the same cosines and the
-    DuckDB oracles hold for either."""
+    It shares _cosine_frame and the final F.round with _score_pairs_arrow,
+    so the two paths emit the same cosines and the DuckDB oracles hold for
+    either."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     # Arrow collect (toPandas), not Row collect: at the _BROADCAST_SCORE_LIMIT
@@ -1106,48 +1109,16 @@ def _score_pairs_closure(
         [in_schema["id_a"], in_schema["id_b"], StructField("cosine", DoubleType())]
     )
 
-    # Ship mode (r15, VERDICT item 5): "closure" captures the matrix in the
-    # python command (re-shipped per TASK — bounded by
-    # _BROADCAST_SCORE_LIMIT but paid once per task on a wide stage);
-    # "broadcast" ships a SparkContext.broadcast once per EXECUTOR and the
-    # UDF dereferences the handle per task. Same arrays either way, so the
-    # cosines are byte-identical. Default stays closure: the r14 sf10 probe
-    # saw a reused Python worker sporadically deadlock reading broadcast
-    # bookkeeping; the env knob exists to A/B the broadcast path at scale.
-    ship_mode = os.environ.get("SPARK_GRAFT_SCORE_SHIP", "closure")
-    if ship_mode == "broadcast":
-        bc = sides.sparkSession.sparkContext.broadcast((ids_sorted, mat))
-
-        def score(batches):
-            b_ids, b_mat = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ia = np.searchsorted(b_ids, pdf["id_a"].to_numpy())
-                ib = np.searchsorted(b_ids, pdf["id_b"].to_numpy())
-                va, vb = b_mat[ia], b_mat[ib]
-                dots = np.einsum("ij,ij->i", va, vb)
-                na = np.sqrt(np.einsum("ij,ij->i", va, va))
-                nb = np.sqrt(np.einsum("ij,ij->i", vb, vb))
-                out = pdf[["id_a", "id_b"]].copy()
-                out["cosine"] = dots / (na * nb)
-                yield out
-
-    else:
-
-        def score(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ia = np.searchsorted(ids_sorted, pdf["id_a"].to_numpy())
-                ib = np.searchsorted(ids_sorted, pdf["id_b"].to_numpy())
-                va, vb = mat[ia], mat[ib]
-                dots = np.einsum("ij,ij->i", va, vb)
-                na = np.sqrt(np.einsum("ij,ij->i", va, va))
-                nb = np.sqrt(np.einsum("ij,ij->i", vb, vb))
-                out = pdf[["id_a", "id_b"]].copy()
-                out["cosine"] = dots / (na * nb)
-                yield out
+    # The matrix rides in the python command, re-shipped per task (bounded
+    # by _BROADCAST_SCORE_LIMIT); shipping it as a SparkContext.broadcast
+    # measured 36% slower.
+    def score(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ia = np.searchsorted(ids_sorted, pdf["id_a"].to_numpy())
+            ib = np.searchsorted(ids_sorted, pdf["id_b"].to_numpy())
+            yield _cosine_frame(pdf, mat[ia], mat[ib])
 
     scored = pairs.mapInPandas(score, out_schema)
     return scored.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))

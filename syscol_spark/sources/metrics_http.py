@@ -30,40 +30,33 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
-SOURCE_SCHEMA = StructType(
-    [
-        StructField("SlaveID", StringType(), False),
-        StructField("Hostname", StringType(), False),
-        StructField("Port", IntegerType(), False),
-        StructField("Namespace", StringType(), True),
-        StructField("Timestamp", LongType(), False),
-        StructField("Metrics", MapType(StringType(), DoubleType()), False),
-        StructField("error", StringType(), True),  # S3: scrape-error column
-    ]
-)
+from syscol_spark.functions.envelope import ENVELOPE_SCHEMA
+
+# the envelope plus the S3 scrape-error column
+SOURCE_SCHEMA = StructType([*ENVELOPE_SCHEMA.fields, StructField("error", StringType(), True)])
 
 
 def fetch_snapshot(host: str, port: int, timeout: float = 5.0) -> tuple[dict[str, float], str | None]:
     """One scrape (metrics_reporter.go:112-131). Returns (metrics, error);
     on any failure the metrics map is empty and error is set — mirroring the
-    reference's log-and-continue semantics (:89-94)."""
+    reference's log-and-continue semantics (:89-94). A value ``float()``
+    rejects drops only its own key, which the error names; the reference
+    forwards the whole map, so the other values still go out."""
     import urllib.request
 
     url = f"http://{host}:{port}/metrics/snapshot"
     try:
         with urllib.request.urlopen(url, timeout=timeout) as resp:  # noqa: S310
             payload = json.loads(resp.read().decode("utf-8"))
-        return ({str(k): float(v) for k, v in payload.items()}, None)
+        metrics, dropped = {}, []
+        for k, v in payload.items():
+            try:
+                metrics[str(k)] = float(v)
+            except (TypeError, ValueError):
+                dropped.append(str(k))
+        return (metrics, f"non-numeric values dropped: {', '.join(dropped)}" if dropped else None)
     except Exception as e:  # noqa: BLE001
         return ({}, f"{type(e).__name__}: {e}")
 
@@ -89,7 +82,24 @@ class _HostTickPartition(InputPartition):
         self.end_tick = end_tick
 
 
-class MetricsSnapshotStreamReader(DataSourceStreamReader):
+class _HostReader:
+    """What the batch and stream readers share: the hosts/port/namespace
+    options and the one-scrape-per-host ``read``."""
+
+    def __init__(self, schema: StructType, options: dict):
+        self.hosts = [h.strip() for h in options.get("hosts", "localhost").split(",") if h.strip()]
+        self.port = int(options.get("port", 5051))
+        self.namespace = options.get("namespace", "")
+
+    def read(self, partition: _HostTickPartition) -> Iterator[tuple]:
+        # One scrape per micro-batch per host: ticks within a batch coalesce
+        # (the reference also drops ticks when a scrape outlasts the
+        # interval — ticker semantics).
+        metrics, err = fetch_snapshot(partition.host, partition.port)
+        yield _row(partition.host, partition.port, partition.namespace, metrics, err)
+
+
+class MetricsSnapshotStreamReader(_HostReader, DataSourceStreamReader):
     """Offsets: {"tick": n} where n is the EPOCH-based tick
     ``floor(unix_time / interval)`` — not ticks since reader construction.
 
@@ -102,9 +112,7 @@ class MetricsSnapshotStreamReader(DataSourceStreamReader):
     A monotonic guard absorbs wall-clock steps backwards (NTP)."""
 
     def __init__(self, schema: StructType, options: dict):
-        self.hosts = [h.strip() for h in options.get("hosts", "localhost").split(",") if h.strip()]
-        self.port = int(options.get("port", 5051))
-        self.namespace = options.get("namespace", "")
+        super().__init__(schema, options)
         self.interval = float(options.get("interval", 1.0))
         self._max_tick = self._epoch_tick()
 
@@ -124,29 +132,13 @@ class MetricsSnapshotStreamReader(DataSourceStreamReader):
             for h in self.hosts
         ]
 
-    def read(self, partition: _HostTickPartition) -> Iterator[tuple]:
-        # One scrape per micro-batch per host: ticks within a batch coalesce
-        # (the reference also drops ticks when a scrape outlasts the
-        # interval — ticker semantics).
-        metrics, err = fetch_snapshot(partition.host, partition.port)
-        yield _row(partition.host, partition.port, partition.namespace, metrics, err)
-
     def commit(self, end: dict) -> None:
         pass
 
 
-class MetricsSnapshotBatchReader(DataSourceReader):
-    def __init__(self, schema: StructType, options: dict):
-        self.hosts = [h.strip() for h in options.get("hosts", "localhost").split(",") if h.strip()]
-        self.port = int(options.get("port", 5051))
-        self.namespace = options.get("namespace", "")
-
+class MetricsSnapshotBatchReader(_HostReader, DataSourceReader):
     def partitions(self) -> list[InputPartition]:
         return [_HostTickPartition(h, self.port, self.namespace, 0, 1) for h in self.hosts]
-
-    def read(self, partition: _HostTickPartition) -> Iterator[tuple]:
-        metrics, err = fetch_snapshot(partition.host, partition.port)
-        yield _row(partition.host, partition.port, partition.namespace, metrics, err)
 
 
 class MetricsSnapshotDataSource(DataSource):

@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from syscol_spark.functions.envelope import explode_envelope, parse_envelope_json
+
 
 def with_event_time(stream: DataFrame, ts_ns_col: str = "envelope.Timestamp") -> DataFrame:
     return stream.withColumn("event_time", F.timestamp_micros(F.expr(f"{ts_ns_col} div 1000")))
@@ -42,13 +44,12 @@ def parse_serialized_stream(raw: DataFrame, *, transform: str = "none", value_co
     ``value`` column) → typed envelope column, for either transform mode.
     Chain with the operators below exactly like the producer-side stream."""
     from syscol_spark.functions.confluent import from_confluent_avro
-    from syscol_spark.functions.envelope import parse_envelope_json
 
     v = F.col(value_col)
     if transform == "none":
         parsed = parse_envelope_json(v.cast("string"))
     elif transform == "avro":
-        parsed = F.from_json(from_confluent_avro(v), "SlaveID STRING, Hostname STRING, Port INT, Namespace STRING, Timestamp BIGINT, Metrics MAP<STRING, DOUBLE>")
+        parsed = parse_envelope_json(from_confluent_avro(v))
     else:
         raise ValueError(f"unknown transform {transform!r}")
     return raw.select(parsed.alias("envelope"))
@@ -57,15 +58,7 @@ def parse_serialized_stream(raw: DataFrame, *, transform: str = "none", value_co
 def long_view(stream: DataFrame) -> DataFrame:
     """Envelope stream → canonical long/narrow analytics view
     (SURVEY.md §1.5): one row per metric with µs event time + ns fidelity."""
-    s = with_event_time(stream)
-    return s.select(
-        F.col("event_time").alias("ts"),
-        F.col("envelope.Timestamp").alias("ts_ns"),
-        F.col("envelope.SlaveID").alias("slave_id"),
-        F.col("envelope.Hostname").alias("hostname"),
-        F.col("envelope.Namespace").alias("namespace"),
-        F.explode("envelope.Metrics").alias("metric", "value"),
-    )
+    return explode_envelope(stream)
 
 
 def windowed_metric_rates(

@@ -19,7 +19,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from syscol_spark.functions.confluent import (
-    FlatAvroCodec,
+    AvroCodec,
     frame_confluent,
     unframe_confluent,
     zigzag_decode,
@@ -75,7 +75,7 @@ def test_zigzag_varint_length_is_minimal(v):
     os_=st.none() | st.text(max_size=40),
 )
 def test_flat_record_round_trip(b, i, l, f, d, s, y, ol, os_):  # noqa: E741
-    codec = FlatAvroCodec(SCHEMA)
+    codec = AvroCodec(SCHEMA)
     rec = {"b": b, "i": i, "l": l, "f": f, "d": d, "s": s, "y": y, "ol": ol, "os": os_}
     out = codec.decode(codec.encode(rec))
     assert out["b"] == b and out["i"] == i and out["l"] == l
@@ -103,21 +103,13 @@ def test_confluent_frame_layout_and_round_trip(body, sid):
 # plus named references (including recursive schemas). hypothesis drives
 # randomly-shaped nested schemas AND matching values through encode/decode.
 
-from syscol_spark.functions.confluent import (  # noqa: E402
-    AvroCodec,
-    _bytes_to_jsonable,
-    codec_for,
-)
-
 _PRIMS = ("null", "boolean", "int", "long", "float", "double", "bytes", "string")
 
 
 @st.composite
-def schema_and_value(draw, json_safe=False):
+def schema_and_value(draw):
     """A (schema, value) pair: random nested schema of bounded depth plus a
-    value conforming to it. ``json_safe=True`` restricts unions so the
-    JSON-interop round trip is lossless (no string-vs-bytes ambiguity, no
-    float32 precision loss through repr)."""
+    value conforming to it."""
     ctr = [0]
 
     def fresh(prefix):
@@ -150,11 +142,8 @@ def schema_and_value(draw, json_safe=False):
         # union: branches with pairwise-distinct value domains so the
         # documented first-match encode semantics round-trip losslessly.
         # (Avro itself forbids duplicate unnamed types in a union.)
-        domains = [["null"], ["boolean"], ["long"] if json_safe else ["int", "long"],
-                   ["double"], ["string"], ["bytes"]]
+        domains = [["null"], ["boolean"], ["int", "long"], ["double"], ["string"], ["bytes"]]
         picks = draw(st.lists(st.sampled_from(range(len(domains))), min_size=1, max_size=3, unique=True))
-        if json_safe and 4 in picks and 5 in picks:
-            picks.remove(5)  # string|bytes union: JSON can't tell them apart
         branches = [draw(st.sampled_from(domains[i])) for i in picks]
         if depth < 3 and draw(st.booleans()):
             branches.append({"type": "record", "name": fresh("R"),
@@ -212,39 +201,6 @@ def test_nested_round_trip(sv):
     schema, value = sv
     codec = AvroCodec(schema)
     assert _norm(codec.decode(codec.encode(value))) == _norm(value)
-
-
-@settings(max_examples=150, deadline=None)
-@given(sv=schema_and_value(json_safe=True))
-def test_nested_json_interop_round_trip(sv):
-    """decode→JSON→coerce→encode is byte-stable: the executor JSON bridge
-    (latin-1 bytes mapping, schema-guided coercion) loses nothing for
-    json-safe schemas."""
-    import json as _json
-
-    schema, value = sv
-    codec = AvroCodec(schema)
-    wire = codec.encode(value)
-    j = _json.dumps(_bytes_to_jsonable(codec.decode(wire)))
-    assert codec.encode(codec.coerce_jsonable(_json.loads(j))) == wire
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    b=st.booleans(), i=I32, l=I64, f=F32, d=F64,  # noqa: E741
-    s=st.text(max_size=40), y=st.binary(max_size=40), ol=st.none() | I64,
-)
-def test_flat_fast_path_bytes_identical(b, i, l, f, d, s, y, ol):  # noqa: E741
-    """codec_for's flat fast path and the full codec agree byte-for-byte,
-    so the dispatch is invisible on the wire."""
-    rec = {"b": b, "i": i, "l": l, "f": f, "d": d, "s": s, "y": y, "ol": ol}
-    flat = codec_for(SCHEMA)
-    assert isinstance(flat, FlatAvroCodec)
-    full = AvroCodec(SCHEMA)
-    # SCHEMA has 9 fields incl os; supply it
-    rec["os"] = None
-    assert flat.encode(rec) == full.encode(rec)
-    assert _norm(full.decode(flat.encode(rec))) == _norm(flat.decode(flat.encode(rec)))
 
 
 def test_recursive_named_reference():

@@ -8,9 +8,9 @@ from __future__ import annotations
 import pytest
 
 from syscol_spark.functions.confluent import (
+    AvroCodec,
     AvroResolver,
     AvroSchemaResolutionError,
-    codec_for,
     decode_resolved,
 )
 
@@ -54,7 +54,7 @@ RECORD = {
 
 
 def test_full_evolution_round_trip():
-    body = codec_for(WRITER).encode(RECORD)
+    body = AvroCodec(WRITER).encode(RECORD)
     got = decode_resolved(body, WRITER, READER)
     assert got == {
         "host": "h1",
@@ -115,7 +115,7 @@ def test_record_and_field_aliases_rename():
     r = {"type": "record", "name": "Envelope", "aliases": ["OldEnv"], "fields": [
         {"name": "host", "type": "string", "aliases": ["hostname"]},
         {"name": "port", "type": "long"}]}
-    body = codec_for(w).encode({"hostname": "h9", "port": 1})
+    body = AvroCodec(w).encode({"hostname": "h9", "port": 1})
     assert decode_resolved(body, w, r) == {"host": "h9", "port": 1}
 
 

@@ -11,12 +11,13 @@ import time
 import pytest
 
 
-@pytest.fixture(scope="module")
-def stub_server():
+def _serve(payload: dict):
+    """Start a stub /metrics/snapshot server answering with ``payload``."""
+
     class Handler(http.server.BaseHTTPRequestHandler):
         def do_GET(self):  # noqa: N802
             if self.path == "/metrics/snapshot":
-                body = json.dumps({"slave/cpus_total": 4.0, "slave/mem_total": 2048.0}).encode()
+                body = json.dumps(payload).encode()
                 self.send_response(200)
                 self.send_header("Content-Type", "application/json")
                 self.end_headers()
@@ -29,8 +30,21 @@ def stub_server():
             pass
 
     srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv
+
+
+@pytest.fixture(scope="module")
+def stub_server():
+    srv = _serve({"slave/cpus_total": 4.0, "slave/mem_total": 2048.0})
+    yield srv.server_address[1]
+    srv.shutdown()
+
+
+@pytest.fixture(scope="module")
+def mixed_server():
+    """A host whose snapshot mixes numeric and non-numeric values."""
+    srv = _serve({"slave/cpus_total": 4.0, "slave/version": "1.2.3", "slave/mem_total": "2048", "slave/tags": [1]})
     yield srv.server_address[1]
     srv.shutdown()
 
@@ -41,6 +55,15 @@ def test_fetch_snapshot_ok(stub_server):
     metrics, err = fetch_snapshot("127.0.0.1", stub_server)
     assert err is None
     assert metrics == {"slave/cpus_total": 4.0, "slave/mem_total": 2048.0}
+
+
+def test_fetch_snapshot_keeps_numeric_values(mixed_server):
+    """A non-numeric value drops only its own key, and the error names it."""
+    from syscol_spark.sources.metrics_http import fetch_snapshot
+
+    metrics, err = fetch_snapshot("127.0.0.1", mixed_server)
+    assert metrics == {"slave/cpus_total": 4.0, "slave/mem_total": 2048.0}
+    assert err == "non-numeric values dropped: slave/version, slave/tags"
 
 
 def test_fetch_snapshot_error_tolerance():

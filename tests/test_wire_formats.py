@@ -91,9 +91,9 @@ PAGE_VIEW_AVSC = {
 def test_flat_codec_second_schema_round_trip():
     """General read/write path beyond the fixed envelope: a second flat
     record with every primitive type + an optional union."""
-    from syscol_spark.functions.confluent import FlatAvroCodec
+    from syscol_spark.functions.confluent import AvroCodec
 
-    codec = FlatAvroCodec(PAGE_VIEW_AVSC)
+    codec = AvroCodec(PAGE_VIEW_AVSC)
     rec = {
         "url": "https://example.com/a?b=c",
         "user_id": 2**40 + 7,
@@ -113,30 +113,18 @@ def test_flat_codec_second_schema_round_trip():
     assert struct.pack("<f", 0.5) in body
 
 
-def test_flat_codec_rejects_nested():
-    import pytest
-
-    from syscol_spark.functions.confluent import FlatAvroCodec
-
-    with pytest.raises(ValueError, match="unsupported type"):
-        FlatAvroCodec(
-            {"type": "record", "name": "X",
-             "fields": [{"name": "m", "type": {"type": "map", "values": "double"}}]}
-        )
-
-
 def test_generic_confluent_dispatch_spark(spark):
     """Schema-id dispatch: one binary column carrying two different record
     types decodes row-by-row against the right schema; unknown ids → NULL."""
     from syscol_spark.functions.confluent import (
         SLAVE_METRICS_AVSC,
-        FlatAvroCodec,
+        AvroCodec,
         frame_confluent,
         from_confluent_avro_generic,
     )
 
-    pv = FlatAvroCodec(PAGE_VIEW_AVSC)
-    sm = FlatAvroCodec(SLAVE_METRICS_AVSC)
+    pv = AvroCodec(PAGE_VIEW_AVSC)
+    sm = AvroCodec(SLAVE_METRICS_AVSC)
     rows = [
         (1, frame_confluent(sm.encode({
             "SlaveID": "S1", "Hostname": "h", "Port": 1, "Namespace": "",
@@ -161,7 +149,11 @@ def test_generic_confluent_dispatch_spark(spark):
 def test_generic_confluent_write_read_spark(spark):
     from syscol_spark.functions.confluent import from_confluent_avro_generic, to_confluent_avro_generic
 
-    df = spark.createDataFrame([("u1", 42, 1.25, True)], ["url", "user_id", "duration_s", "bounced"])
+    df = spark.createDataFrame(
+        [("u1", 42, 1.25, True, {"a": 1, "b": 2}, ("x", [3, 4]))],
+        "url string, user_id long, duration_s double, bounced boolean, "
+        "tags map<string, long>, ref struct<name: string, ids: array<long>>",
+    )
     schema = {
         "type": "record", "name": "Visit",
         "fields": [
@@ -169,13 +161,70 @@ def test_generic_confluent_write_read_spark(spark):
             {"name": "user_id", "type": "long"},
             {"name": "duration_s", "type": "double"},
             {"name": "bounced", "type": "boolean"},
+            {"name": "tags", "type": ["null", {"type": "map", "values": "long"}]},
+            {"name": "ref", "type": {"type": "record", "name": "Ref", "fields": [
+                {"name": "name", "type": "string"},
+                {"name": "ids", "type": {"type": "array", "items": "long"}},
+            ]}},
         ],
     }
-    framed = df.select(
-        to_confluent_avro_generic(F.struct("url", "user_id", "duration_s", "bounced"), schema, 7).alias("v")
-    )
+    framed = df.select(to_confluent_avro_generic(F.struct(*df.columns), schema, 7).alias("v"))
     [row] = framed.select(from_confluent_avro_generic(F.col("v"), {7: schema}).alias("j")).collect()
-    assert json.loads(row["j"]) == {"url": "u1", "user_id": 42, "duration_s": 1.25, "bounced": True}
+    assert json.loads(row["j"]) == {
+        "url": "u1", "user_id": 42, "duration_s": 1.25, "bounced": True,
+        "tags": {"a": 1, "b": 2}, "ref": {"name": "x", "ids": [3, 4]},
+    }
+
+
+def test_generic_confluent_binary_fields_spark(spark):
+    """Binary cells travel as their raw bytes, an optional-bytes field takes
+    both union branches, and a nullable long keeps all 64 bits when a null
+    shares its Arrow batch."""
+    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+
+    from syscol_spark.functions.confluent import from_confluent_avro_generic, to_confluent_avro_generic
+
+    schema = {
+        "type": "record", "name": "Blob",
+        "fields": [
+            {"name": "raw", "type": "bytes"},
+            {"name": "extra", "type": ["null", "bytes"]},
+            {"name": "n", "type": ["null", "long"]},
+        ],
+    }
+    rows = [(b"\x00\x01\xfe\xff", None, None), (b"", b"\xff\x00", 2**53 + 1)]
+    df = spark.createDataFrame(rows, StructType([
+        StructField("raw", BinaryType()), StructField("extra", BinaryType()), StructField("n", LongType()),
+    ])).coalesce(1)
+    framed = df.select(to_confluent_avro_generic(F.struct("raw", "extra", "n"), schema, 9).alias("v"))
+    got = [json.loads(r["j"]) for r in framed.select(from_confluent_avro_generic(F.col("v"), {9: schema}).alias("j")).collect()]
+    back = sorted((d["raw"].encode("latin-1"), d["extra"] and d["extra"].encode("latin-1"), d["n"]) for d in got)
+    assert back == sorted(rows)
+
+
+def test_confluent_avro_golden_frame(spark):
+    """The exact frame the envelope UDF writes for one fixed envelope."""
+    df = spark.createDataFrame(
+        [("S7-S0", "node-1", 5051, "prod", 1704067798778549829,
+          {"slave/cpus_total": 4.0, "system/load_1min": 0.25, "slave/mem_used": 1.5e10})],
+        ENVELOPE_SCHEMA,
+    )
+    env = enrich_envelope(
+        F.col("Metrics"), slave_id=F.col("SlaveID"), hostname=F.col("Hostname"),
+        port=F.col("Port"), namespace=F.col("Namespace"), timestamp_ns=F.col("Timestamp"),
+    )
+    [row] = df.select(to_confluent_avro(env, schema_id=42).alias("v")).collect()
+    assert bytes(row["v"]).hex() == (
+        "000000002a"  # magic 0x00 + schema id 42
+        "0a53372d5330"  # SlaveID "S7-S0"
+        "0c6e6f64652d31"  # Hostname "node-1"
+        "f64e"  # Port 5051
+        "0870726f64"  # Namespace "prod"
+        "8ad984b6cda888a62f"  # Timestamp (ns)
+        "9e01"  # Metrics: 79 bytes of compact JSON
+        "7b22736c6176652f637075735f746f74616c223a342e302c2273797374656d2f6c6f61645f316d696e223a"
+        "302e32352c22736c6176652f6d656d5f75736564223a31353030303030303030302e307d"
+    )
 
 
 def test_confluent_frame_layout():
